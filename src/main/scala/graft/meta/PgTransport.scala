@@ -64,7 +64,8 @@ object PgTransportFactory {
   @volatile var connectionCacheEnabled: Boolean = true
 
   /** `pg_debug_show_queries` analogue (ref: src/postgres_extension.cpp:
-    * 182-183): print every statement sent to the server. */
+    * 182-183): print every statement sent through a pooled transport
+    * ([[PgConnectionPool]] prints, once per statement). */
   @volatile var debugShowQueries: Boolean = false
 
   private[meta] def debug(sql: String): Unit =
@@ -212,12 +213,14 @@ object PgSnapshotLease {
   */
 object PgConnectionPool {
   import java.util.concurrent.{ConcurrentHashMap, Semaphore}
+  import java.util.concurrent.atomic.AtomicLong
 
   private final class DsnPool(dsn: String) {
     val permits = new Semaphore(PgTransportFactory.connectionLimit)
     val idle = new java.util.concurrent.ConcurrentLinkedQueue[PgTransport]()
-    @volatile var acquires: Long = 0L
-    @volatile var reuses: Long = 0L
+    // bumped from concurrent scan tasks: atomic, or updates are lost
+    val acquires = new AtomicLong
+    val reuses = new AtomicLong
   }
 
   private val pools = new ConcurrentHashMap[String, DsnPool]()
@@ -249,14 +252,14 @@ object PgConnectionPool {
     // after connectionLimit failures every acquire on the DSN blocks
     // forever, long after the server recovers
     try {
-      pool.acquires += 1
+      pool.acquires.incrementAndGet()
       val cached = pool.idle.poll()
       val raw = cached match {
         case null => PgTransportFactory.openRaw(dsn)
         case t =>
           // health check on reuse (ref: pool reset-on-return + check);
           // a transport that fails the probe is closed, not reused
-          try { t.query(PgCatalogQueries.versionProbe); pool.reuses += 1; t }
+          try { t.query(PgCatalogQueries.versionProbe); pool.reuses.incrementAndGet(); t }
           catch {
             case _: Exception =>
               try t.close() catch { case _: Exception => () }
@@ -269,14 +272,19 @@ object PgConnectionPool {
     }
   }
 
-  /** (acquires, reuses) counters for a DSN — test observability. */
+  /** (acquires, reuses) counters for a DSN — test observability.
+    * Reuses are read first: an acquire counts itself before its reuse,
+    * so a concurrent read never shows more reuses than acquires. */
   def stats(dsn: String): (Long, Long) = {
     val p = pools.get(dsn)
-    if (p == null) (0L, 0L) else (p.acquires, p.reuses)
+    if (p == null) (0L, 0L)
+    else { val reuses = p.reuses.get(); (p.acquires.get(), reuses) }
   }
 
-  /** Tracks session state so release can reset the connection before it
-    * is pooled (the reference resets connections on return —
+  /** Echoes statements for `debugShowQueries` — the one layer that
+    * does, so each prints once whatever the DSN — and tracks session
+    * state so release can reset the connection before it is pooled
+    * (the reference resets connections on return —
     * ref: src/storage/postgres_connection_pool.cpp:91-119):
     *   - an open transaction (BEGIN without COMMIT/ROLLBACK) is rolled
     *     back so a reused connection never serves reads from a stale
@@ -305,8 +313,10 @@ object PgConnectionPool {
       underlying.query(sql)
     }
 
-    override def describe(sql: String): Seq[(String, graft.types.PgType)] =
+    override def describe(sql: String): Seq[(String, graft.types.PgType)] = {
+      PgTransportFactory.debug(s"DESCRIBE: $sql")
       underlying.describe(sql)
+    }
 
     override def copyOut(sql: String): java.io.InputStream = {
       PgTransportFactory.debug(sql)
@@ -314,26 +324,24 @@ object PgConnectionPool {
       openCopies += 1
       new java.io.FilterInputStream(in) {
         private var settled = false
-        override def close(): Unit = {
-          if (!settled) {
-            settled = true
-            // drain to the end of the COPY so the connection is back in
-            // a command-ready state (libpq likewise consumes copy data
-            // to completion) — but bounded: a scan terminated early
-            // (e.g. a LIMIT stopped consuming) must not read the whole
-            // remaining table over the wire just to recycle one
-            // connection. Past the budget the copy stays open and
-            // close() discards the connection instead.
-            try {
-              val buf = new Array[Byte](8192)
-              val budget = 4L * 1024 * 1024
-              var drained = 0L
-              var n = in.read(buf)
-              while (n != -1 && drained <= budget) { drained += n; n = in.read(buf) }
-              if (n == -1) openCopies -= 1
-            } catch { case _: Exception => () }
-          }
-          super.close()
+        override def close(): Unit = if (!settled) {
+          settled = true
+          // drain to the end of the COPY so the connection is back in
+          // a command-ready state (libpq likewise consumes copy data
+          // to completion) — but bounded: a scan terminated early
+          // (e.g. a LIMIT stopped consuming) must not read the whole
+          // remaining table over the wire just to recycle one
+          // connection. Past the budget, or after a failed read, the
+          // inner stream is left unclosed (its close would read on to
+          // CopyDone) and close() discards the connection instead.
+          try {
+            val buf = new Array[Byte](8192)
+            val budget = 4L * 1024 * 1024
+            var drained = 0L
+            var n = in.read(buf)
+            while (n != -1 && drained <= budget) { drained += n; n = in.read(buf) }
+            if (n == -1) { in.close(); openCopies -= 1 }
+          } catch { case _: Exception => () }
         }
       }
     }

@@ -392,21 +392,64 @@ final class PgWireServer(backend: PgTransport,
     }
   }
 
+  /** COPY TO STDOUT framed the way PostgreSQL frames it: one CopyData
+    * per PGCOPY tuple (the binary header rides with the first, the
+    * trailer goes alone), one per line in text format — so the client's
+    * copy stream sees per-tuple message boundaries here too. */
   private def copyOut(sql: String, out: DataOutputStream): Unit = {
     val stream = backend.copyOut(sql)
     try {
-      val fmt: Byte = if (sql.toLowerCase.contains("binary")) 1 else 0
+      val binary = sql.toLowerCase.contains("binary")
       // CopyOutResponse; per-column formats omitted (count 0) — the
       // copy payload itself carries the real structure
-      send(out, 'H', Array[Byte](fmt, 0, 0))
-      val buf = new Array[Byte](1 << 16)
-      var n = stream.read(buf)
-      while (n > 0) {
+      send(out, 'H', Array[Byte](if (binary) 1 else 0, 0, 0))
+      val src = new DataInputStream(new BufferedInputStream(stream, 1 << 16))
+      val frame = new ByteArrayOutputStream(1 << 10)
+      val fd = new DataOutputStream(frame)
+      def sendFrame(): Unit = if (frame.size() > 0) {
         out.writeByte('d')
-        out.writeInt(n + 4)
-        out.write(buf, 0, n)
-        n = stream.read(buf)
+        out.writeInt(frame.size() + 4)
+        frame.writeTo(out)
+        frame.reset()
       }
+      val scratch = new Array[Byte](1 << 16)
+      def copyBytes(n: Int): Unit = {
+        var left = n
+        while (left > 0) {
+          val k = math.min(left, scratch.length)
+          src.readFully(scratch, 0, k)
+          frame.write(scratch, 0, k)
+          left -= k
+        }
+      }
+      if (binary) {
+        copyBytes(15) // signature + flags
+        val ext = src.readInt()
+        fd.writeInt(ext)
+        copyBytes(ext)
+        var first = src.read()
+        while (first >= 0) {
+          val nfields = ((first << 8) | src.readUnsignedByte()).toShort
+          fd.writeShort(nfields)
+          var i = 0
+          while (i < nfields) {
+            val len = src.readInt()
+            fd.writeInt(len)
+            if (len > 0) copyBytes(len)
+            i += 1
+          }
+          sendFrame() // a tuple, or the trailer (nfields = -1)
+          first = src.read()
+        }
+      } else {
+        var b = src.read()
+        while (b >= 0) {
+          frame.write(b)
+          if (b == '\n') sendFrame()
+          b = src.read()
+        }
+      }
+      sendFrame()
       send(out, 'c', Array.emptyByteArray) // CopyDone
       commandComplete(out, "COPY")
     } finally stream.close()

@@ -1,6 +1,6 @@
 package graft.meta
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -83,6 +83,90 @@ private[graft] object PgWireProtocol {
   }
 }
 
+/** Unsynchronized buffered reader over a client socket — every backend
+  * message [[PgWireTransport]] reads goes through it. Unlike
+  * `DataInputStream` over `BufferedInputStream`, a header costs plain
+  * array arithmetic instead of five monitor-guarded virtual reads,
+  * which matters when a COPY sends one message per tuple. */
+private final class PgWireReader(src: InputStream) {
+  private val buf = new Array[Byte](1 << 16)
+  private var pos = 0
+  private var lim = 0
+
+  def buffered: Int = lim - pos
+
+  /** Make at least `n` (≤ buffer size) bytes available at `pos`. */
+  private def ensure(n: Int): Unit = if (lim - pos < n) {
+    System.arraycopy(buf, pos, buf, 0, lim - pos)
+    lim -= pos
+    pos = 0
+    while (lim < n) {
+      val r = src.read(buf, lim, buf.length - lim)
+      if (r < 0) throw new EOFException("connection closed mid-message")
+      lim += r
+    }
+  }
+
+  def readByte(): Byte = { ensure(1); val b = buf(pos); pos += 1; b }
+
+  def readInt(): Int = {
+    ensure(4)
+    val v = ((buf(pos) & 0xff) << 24) | ((buf(pos + 1) & 0xff) << 16) |
+      ((buf(pos + 2) & 0xff) << 8) | (buf(pos + 3) & 0xff)
+    pos += 4
+    v
+  }
+
+  /** Body length from a message's int32 length word (which counts
+    * itself, not the tag). */
+  def bodyLength(tag: Byte): Int = {
+    val len = readInt() - 4
+    if (len < 0) throw new EOFException(s"negative message length for tag $tag")
+    len
+  }
+
+  /** Copy between 1 and `len` (> 0) bytes into `b`: from the buffer
+    * when it holds any, else straight from the socket when `len`
+    * would not fit the buffer anyway, else after one refill. */
+  def readSome(b: Array[Byte], off: Int, len: Int): Int = {
+    if (pos == lim) {
+      if (len >= buf.length) {
+        val r = src.read(b, off, len)
+        if (r < 0) throw new EOFException("connection closed mid-message")
+        return r
+      }
+      ensure(1)
+    }
+    val n = math.min(len, lim - pos)
+    System.arraycopy(buf, pos, b, off, n)
+    pos += n
+    n
+  }
+
+  def readFully(b: Array[Byte], off: Int, len: Int): Unit = {
+    var n = 0
+    while (n < len) n += readSome(b, off + n, len - n)
+  }
+
+  def skip(len: Int): Unit = {
+    var left = len
+    while (left > 0) {
+      ensure(1)
+      val k = math.min(left, lim - pos)
+      pos += k
+      left -= k
+    }
+  }
+
+  /** One whole message, the [[PgWireProtocol.read]] shape. */
+  def readMsg(): PgWireProtocol.Msg = {
+    val tag = readByte()
+    val body = new Array[Byte](bodyLength(tag))
+    readFully(body, 0, body.length)
+    PgWireProtocol.Msg(tag, body)
+  }
+}
+
 /** Socket implementation of [[PgTransport]] speaking the PostgreSQL
   * frontend protocol — the live-server counterpart of [[InMemoryPg]].
   * DSN form: `tcp:host:port/dbname[?user=name&password=pw&sslmode=m]`.
@@ -98,6 +182,14 @@ private[graft] object PgWireProtocol {
   * tests it in test/sql/scanner/ssl.test:9-15. Authentication —
   * including the SCRAM exchange — runs over the negotiated channel, so
   * with TLS the credentials never cross plaintext.
+  *
+  * COPY-out path: PostgreSQL sends `COPY … TO STDOUT` as one CopyData
+  * message per tuple (the binary header rides with the first, the
+  * trailer goes alone), so a scan is millions of ~100-byte messages.
+  * All reads go through one unsynchronized [[PgWireReader]], and the
+  * copy stream parses CopyData headers inside its buffer, copying
+  * payload bytes straight into the decoder's array — no per-message
+  * object, body array or monitor.
   *
   * One instance per scan partition / write task, exactly like the
   * reference's one-libpq-connection-per-task model
@@ -116,7 +208,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
     plain.setTcpNoDelay(true)
     PgTls.clientNegotiate(plain, host, port, sslmode, sslrootcert)
   }
-  private val in = new DataInputStream(new BufferedInputStream(socket.getInputStream, 1 << 16))
+  private val wire = new PgWireReader(socket.getInputStream)
   private val out = new DataOutputStream(new BufferedOutputStream(socket.getOutputStream, 1 << 16))
   private var closed = false
 
@@ -136,7 +228,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
     out.write(bytes); out.flush()
     var ready = false
     while (!ready) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'R' => authenticate(m)
         case 'S' | 'K' | 'N' => // ParameterStatus / BackendKeyData / Notice
@@ -195,7 +287,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
         d.write(initial)
         sendFlush(out, 'p', body.toByteArray)
         // SASLContinue (R code 11)
-        val cont = read(in)
+        val cont = wire.readMsg()
         if (cont.tag.toChar == 'E') throw serverError(cont)
         val ci = cont.in
         require(cont.tag.toChar == 'R' && ci.readInt() == 11,
@@ -211,7 +303,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
         // SASLFinal (R code 12) carries v=ServerSignature — verifying it
         // authenticates the SERVER to us (it proves knowledge of the
         // stored ServerKey), which trust/md5 never did
-        val fin = read(in)
+        val fin = wire.readMsg()
         if (fin.tag.toChar == 'E') throw serverError(fin)
         val fi = fin.in
         require(fin.tag.toChar == 'R' && fi.readInt() == 12,
@@ -234,7 +326,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
     var err = firstError
     var done = false
     while (!done) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'Z' => done = true
         case 'E' => if (err.isEmpty) err = Some(serverError(m))
@@ -245,19 +337,17 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
   }
 
   override def execute(sql: String): Unit = {
-    PgTransportFactory.debug(sql)
     sendFlush(out, 'Q', cstr(sql))
     drainToReady()
   }
 
   override def query(sql: String): Seq[Seq[String]] = {
-    PgTransportFactory.debug(sql)
     sendFlush(out, 'Q', cstr(sql))
     val rows = ArrayBuffer.empty[Seq[String]]
     var err: Option[RuntimeException] = None
     var done = false
     while (!done) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'D' =>
           val mi = m.in
@@ -279,7 +369,6 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
   }
 
   override def describe(sql: String): Seq[(String, PgType)] = {
-    PgTransportFactory.debug(s"DESCRIBE: $sql")
     // Parse (unnamed statement) + Describe + Sync — PQprepare/
     // PQdescribePrepared without execution
     val parseBody = new ByteArrayOutputStream()
@@ -294,7 +383,7 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
     var err: Option[RuntimeException] = None
     var done = false
     while (!done) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'T' =>
           val mi = m.in
@@ -318,12 +407,11 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
   }
 
   override def copyOut(sql: String): InputStream = {
-    PgTransportFactory.debug(sql)
     sendFlush(out, 'Q', cstr(sql))
     // expect CopyOutResponse (or an immediate error)
     var started = false
     while (!started) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'H' => started = true
         case 'E' => drainToReady(Some(serverError(m)))
@@ -333,52 +421,82 @@ final class PgWireTransport(host: String, port: Int, database: String, user: Str
             s"expected CopyOutResponse, got '$other'")))
       }
     }
-    new InputStream {
-      private var current: Array[Byte] = Array.emptyByteArray
-      private var pos = 0
-      private var eof = false
+    new CopyOutStream
+  }
 
-      private def refill(): Boolean = {
-        while (!eof && pos >= current.length) {
-          val m = PgWireProtocol.read(in)
-          m.tag.toChar match {
-            case 'd' => current = m.body; pos = 0
-            case 'c' => drainToReady(); eof = true
-            case 'E' => eof = true; drainToReady(Some(serverError(m)))
-            case _ => // CopyOutResponse duplicates / notices
-          }
+  /** The COPY-out payload as one byte stream. A server sends each
+    * tuple as its own CopyData message (~100 bytes for a lineitem
+    * row), so this never materializes messages: it parses each header
+    * inside the reader's buffer and copies payload bytes straight into
+    * the caller's array, across message boundaries. A read returns
+    * early only at a message boundary whose next header is not yet
+    * buffered — mid-message it blocks until the caller's array is
+    * full, so a decoder refilling a large block gets it in few calls.
+    *
+    * An ErrorResponse mid-COPY drains to ReadyForQuery and raises
+    * [[PgServerErrorException]]; that failure (or a cut stream's
+    * EOFException) is sticky — every later read rethrows it rather
+    * than reporting a clean end of data. */
+  private final class CopyOutStream extends InputStream {
+    private var remaining = 0 // payload bytes left in the current CopyData
+    private var done = false // CopyDone (or an error) consumed through ReadyForQuery
+    private var failure: Throwable = null
+    private val one = new Array[Byte](1)
+
+    /** At a message boundary: consume messages until one with payload
+      * is current (true) or the copy has ended (false). */
+    private def advance(): Boolean = {
+      while (remaining == 0 && !done) {
+        val tag = wire.readByte()
+        val len = wire.bodyLength(tag)
+        tag.toChar match {
+          case 'd' => remaining = len
+          case 'c' => wire.skip(len); done = true; drainToReady()
+          case 'E' =>
+            val body = new Array[Byte](len)
+            wire.readFully(body, 0, len)
+            done = true
+            drainToReady(Some(serverError(Msg(tag, body))))
+          case _ => wire.skip(len) // notices / parameter status
         }
-        !eof
       }
+      remaining > 0
+    }
 
-      override def read(): Int =
-        if (!refill()) -1
-        else { val b = current(pos) & 0xff; pos += 1; b }
+    private def guarded[T](body: => T): T = {
+      if (failure != null) throw failure
+      try body
+      catch { case e: Throwable => failure = e; throw e }
+    }
 
-      override def read(b: Array[Byte], off: Int, len: Int): Int =
-        if (!refill()) -1
-        else {
-          val n = math.min(len, current.length - pos)
-          System.arraycopy(current, pos, b, off, n)
-          pos += n
-          n
-        }
+    override def read(): Int =
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
 
-      override def close(): Unit = {
-        // finish the COPY so the connection returns to command-ready;
-        // early-terminated scans are discarded at the pool layer, which
-        // bounds this drain (see PooledTransport)
-        while (!eof) { if (refill()) { pos = current.length } }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = guarded {
+      var n = 0
+      while (n < len &&
+          (remaining > 0 || ((n == 0 || wire.buffered >= 5) && advance()))) {
+        val k = wire.readSome(b, off + n, math.min(len - n, remaining))
+        n += k
+        remaining -= k
       }
+      if (n == 0 && len > 0) -1 else n
+    }
+
+    override def close(): Unit = if (!done && failure == null) guarded {
+      // finish the COPY so the connection returns to command-ready;
+      // an early-terminated scan never gets here through the pool,
+      // which bounds its drain and discards the socket instead (see
+      // PooledTransport)
+      do { wire.skip(remaining); remaining = 0 } while (advance())
     }
   }
 
   override def copyIn(sql: String): OutputStream = {
-    PgTransportFactory.debug(sql)
     sendFlush(out, 'Q', cstr(sql))
     var started = false
     while (!started) {
-      val m = read(in)
+      val m = wire.readMsg()
       m.tag.toChar match {
         case 'G' => started = true
         case 'E' => drainToReady(Some(serverError(m)))

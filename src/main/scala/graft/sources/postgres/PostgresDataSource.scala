@@ -49,15 +49,29 @@ class PostgresDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PostgresTable.discover(PostgresOptions(options.asScala.toMap)).schema
+  // `load()` asks inferSchema, then getTable with the same options, of
+  // one provider instance: keep inferSchema's discovery for that call
+  // instead of paying the catalog round trips twice
+  private var inferred: Option[(Map[String, String], PostgresTable)] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val all = options.asCaseSensitiveMap().asScala.toMap
+    val table = PostgresTable.discover(PostgresOptions(all))
+    inferred = Some(all -> table)
+    table.schema
+  }
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
-    val opts = PostgresOptions(properties.asScala.toMap)
-    PostgresTable.discover(opts) // re-resolve pg types; schema arg must match
+    val all = properties.asScala.toMap
+    val reuse = inferred.collect {
+      case (opts, table) if opts == all && table.schema == schema => table
+    }
+    inferred = None
+    // otherwise re-resolve pg types; the schema arg must match
+    reuse.getOrElse(PostgresTable.discover(PostgresOptions(all)))
   }
 }
 

@@ -500,4 +500,184 @@ class PgWireSpec extends AnyFunSuite {
     assert(used >= 2 && used <= 4,
       s"scan opened $used sockets, budget is 2 scan (+1 discovery, +1 lease)")
   }
+
+  /** A scripted backend for framing tests: trust startup, CommandComplete
+    * for every statement, and for a `COPY … TO STDOUT` a CopyOutResponse
+    * followed by whatever `copy` writes (CopyDone/CommandComplete or an
+    * ErrorResponse); ReadyForQuery closes each reply. */
+  private final class ScriptedServer(copy: java.io.DataOutputStream => Unit)
+      extends AutoCloseable {
+    import java.io._
+    import graft.meta.PgWireProtocol.send
+    private val server = new java.net.ServerSocket(0)
+    val accepted = new java.util.concurrent.atomic.AtomicInteger
+    def dsn: String = s"tcp:127.0.0.1:${server.getLocalPort}/db"
+    private val acceptor = new Thread(() => {
+      try while (true) {
+        val sock = server.accept()
+        accepted.incrementAndGet()
+        val t = new Thread(() => serve(sock))
+        t.setDaemon(true)
+        t.start()
+      } catch { case _: IOException => } // closed
+    })
+    acceptor.setDaemon(true)
+    acceptor.start()
+
+    private def serve(sock: java.net.Socket): Unit = try {
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream, 1 << 16))
+      in.readFully(new Array[Byte](in.readInt() - 4)) // StartupMessage
+      send(out, 'R', Array[Byte](0, 0, 0, 0)) // AuthenticationOk
+      var open = true
+      while (open) {
+        send(out, 'Z', Array[Byte]('I'))
+        out.flush()
+        val m = graft.meta.PgWireProtocol.read(in)
+        m.tag.toChar match {
+          case 'Q' if new String(m.body, "UTF-8").startsWith("COPY") =>
+            send(out, 'H', Array[Byte](1, 0, 0))
+            copy(out)
+          case 'Q' => send(out, 'C', graft.meta.PgWireProtocol.cstr("OK"))
+          case _ => open = false // Terminate
+        }
+      }
+    } catch { case _: IOException => } finally sock.close()
+
+    override def close(): Unit = server.close()
+  }
+
+  /** PGCOPY (bigint, text) rows, returned as the header, each tuple and
+    * the trailer as separate byte arrays. */
+  private def pgcopyParts(rows: Seq[(Long, String)]): Seq[Array[Byte]] = {
+    import graft.types.PgType.{PgInt8, PgText}
+    val w = new graft.codec.PgBinaryWriter(Seq(PgInt8, PgText))
+    def bytes(f: java.io.DataOutputStream => Unit): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val d = new java.io.DataOutputStream(bos)
+      f(d); d.flush(); bos.toByteArray
+    }
+    bytes(w.writeHeader) +: rows.map { case (k, v) =>
+      bytes(w.writeRow(_, new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](k, org.apache.spark.unsafe.types.UTF8String.fromString(v)))))
+    } :+ bytes(w.writeTrailer)
+  }
+
+  private def copyData(out: java.io.DataOutputStream, b: Array[Byte]): Unit =
+    graft.meta.PgWireProtocol.send(out, 'd', b)
+
+  private def copyDone(out: java.io.DataOutputStream): Unit = {
+    graft.meta.PgWireProtocol.send(out, 'c', Array.emptyByteArray)
+    graft.meta.PgWireProtocol.send(out, 'C', graft.meta.PgWireProtocol.cstr("COPY"))
+  }
+
+  private def decodeAll(in: java.io.InputStream): Seq[(Long, String)] = {
+    import graft.types.PgType.{PgInt8, PgText}
+    val r = new graft.codec.PgBinaryReader(Seq(PgInt8, PgText))
+    val bi = new graft.codec.PgBlockInput(in)
+    r.readHeader(bi)
+    Iterator.continually(r.readRow(bi)).takeWhile(_.isDefined)
+      .map(_.get).map(row => (row.getLong(0), row.getUTF8String(1).toString)).toList
+  }
+
+  test("copy-out stream reassembles scripted CopyData frames byte for byte") {
+    val big = "x" * (300 * 1024) // one frame far larger than the reader's buffer
+    val rows = Seq(1L -> "split-me-across-frames", 2L -> "b", 3L -> big, 4L -> "d", 5L -> "")
+    val parts = pgcopyParts(rows)
+    val payload = parts.reduce(_ ++ _)
+    val first = parts(0) ++ parts(1)
+    // 5 bytes into row 1's text value: field count (2), bigint (4 + 8),
+    // text length word (4)
+    val cut = parts(0).length + 23
+    val srv = new ScriptedServer(out => {
+      copyData(out, first.take(cut)) // header + half a field ...
+      graft.meta.PgWireProtocol.send(out, 'N', Array[Byte](0)) // a notice between frames
+      copyData(out, first.drop(cut)) // ... and the rest of it
+      copyData(out, Array.emptyByteArray)
+      parts.drop(2).foreach(copyData(out, _)) // per tuple, the 300 KB one too; trailer alone
+      copyDone(out)
+    })
+    try {
+      val t = graft.meta.PgWireTransport.fromDsn(srv.dsn)
+      try {
+        val sql = "COPY (SELECT k, v FROM t) TO STDOUT (FORMAT binary)"
+        val in = t.copyOut(sql)
+        try assert(decodeAll(in) == rows) finally in.close()
+        // odd read sizes, single bytes and reads larger than the buffer
+        // all see the same bytes
+        for (step <- Seq(1, 7, 4096, 1 << 20)) {
+          val in = t.copyOut(sql)
+          val got = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](step)
+          def next(): Int =
+            if (step > 1) in.read(buf)
+            else { val b = in.read(); if (b < 0) -1 else { buf(0) = b.toByte; 1 } }
+          var n = next()
+          while (n >= 0) {
+            assert(n > 0)
+            got.write(buf, 0, n)
+            n = next()
+          }
+          assert(java.util.Arrays.equals(got.toByteArray, payload), s"read size $step")
+          in.close()
+        }
+        t.execute("SET standard_conforming_strings = on") // back at ReadyForQuery
+      } finally t.close()
+    } finally srv.close()
+  }
+
+  test("an ErrorResponse mid-COPY surfaces its SQLSTATE and the connection is not pooled") {
+    val parts = pgcopyParts((1L to 3L).map(k => k -> s"row_$k"))
+    val fail = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val srv = new ScriptedServer(out => {
+      parts.dropRight(1).foreach(copyData(out, _))
+      if (fail.get())
+        graft.meta.PgWireProtocol.send(out, 'E', graft.meta.PgWireProtocol.errorBody(
+          "ERROR", "57014", "canceling statement due to user request"))
+      else { copyData(out, parts.last); copyDone(out) }
+    })
+    try {
+      val sql = "COPY (SELECT k, v FROM t) TO STDOUT (FORMAT binary)"
+      def scan(): Seq[(Long, String)] = {
+        val t = PgTransportFactory.open(srv.dsn)
+        try { val in = t.copyOut(sql); try decodeAll(in) finally in.close() }
+        finally t.close()
+      }
+      assert(scan().length == 3)
+      assert(scan().length == 3)
+      assert(srv.accepted.get() == 1, "a completed COPY returns its connection to the pool")
+      fail.set(true)
+      val e = intercept[graft.meta.PgServerErrorException](scan())
+      assert(e.sqlState == "57014")
+      fail.set(false)
+      assert(scan().length == 3)
+      assert(srv.accepted.get() == 2, "the connection that saw the error must not be reused")
+    } finally srv.close()
+  }
+
+  test("a tcp: reader closed after its first batch does not drain the rest of the COPY") {
+    import graft.types.PgType.{PgInt8, PgText}
+    import org.apache.spark.sql.types._
+    val parts = pgcopyParts((1L to 4096L).map(k => k -> s"row_$k"))
+    // a COPY that never ends: a close that drained to CopyDone would
+    // never return
+    val srv = new ScriptedServer(out => {
+      copyData(out, parts.head)
+      Iterator.from(0).foreach(k => copyData(out, parts(1 + k % 4096)))
+    })
+    try {
+      val reader = new graft.sources.postgres.PostgresPartitionReader(srv.dsn,
+        "COPY (SELECT k, v FROM t) TO STDOUT (FORMAT binary)", None,
+        Seq(graft.sqlgen.PgSqlGen.ScanColumn("k", PgInt8),
+          graft.sqlgen.PgSqlGen.ScanColumn("v", PgText)),
+        StructType(Seq(StructField("k", LongType), StructField("v", StringType))))
+      (1 to 2048).foreach(_ => assert(reader.next()))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future(reader.close()), scala.concurrent.duration.Duration(60, "s"))
+      val t = PgTransportFactory.open(srv.dsn)
+      t.close()
+      assert(srv.accepted.get() == 2, "the half-read connection must be discarded, not pooled")
+    } finally srv.close()
+  }
 }

@@ -1251,6 +1251,55 @@ class PostgresConnectorSpec extends AnyFunSuite {
     } finally graft.meta.PgTransportFactory.debugShowQueries = false
     assert(buf.toString.contains("SELECT version()"),
       s"debugShowQueries should print statements, got: ${buf.toString}")
+    // over tcp: the pooled wrapper and the socket transport share the
+    // path; each statement still prints exactly once
+    val server = new graft.meta.PgWireServer(p)
+    val wire = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(new java.io.PrintStream(wire)) {
+        graft.meta.PgTransportFactory.debugShowQueries = true
+        val t = graft.meta.PgTransportFactory.open(server.dsn())
+        try {
+          t.query(graft.meta.PgCatalogQueries.versionProbe)
+          t.execute("SET search_path = public")
+        } finally t.close()
+      }
+    } finally {
+      graft.meta.PgTransportFactory.debugShowQueries = false
+      server.close()
+    }
+    val lines = wire.toString.linesIterator.toSeq
+    assert(lines.count(_.contains("SELECT version()")) == 1 &&
+      lines.count(_.contains("SET search_path")) == 1,
+      s"each tcp: statement should print once, got: ${wire.toString}")
+  }
+
+  test("pool stats count every concurrent acquire exactly once") {
+    val dsn = "mem:pool_stats"
+    InMemoryPg.forName("pool_stats")
+    val (threads, k) = (8, 200)
+    val (a0, _) = graft.meta.PgConnectionPool.stats(dsn)
+    val exec = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (1 to threads).map(_ => exec.submit(new Runnable {
+        def run(): Unit = (1 to k).foreach(_ => graft.meta.PgTransportFactory.open(dsn).close())
+      }))
+      done.foreach(_.get())
+    } finally exec.shutdown()
+    val (acquires, reuses) = graft.meta.PgConnectionPool.stats(dsn)
+    assert(acquires - a0 == threads * k)
+    assert(reuses <= acquires)
+  }
+
+  test("load() discovers the table once") {
+    pg
+    def tableInfos = pg.queriedStatements.synchronized(
+      pg.queriedStatements.count(_ == graft.meta.PgCatalogQueries.tableInfo("public", "people")))
+    val before = tableInfos
+    val df = spark.read.format("postgres")
+      .option("dsn", dsn).option("table", "people").load()
+    assert(df.columns.toSeq == Seq("id", "name", "score"))
+    assert(tableInfos - before == 1, "inferSchema's discovery should serve getTable")
   }
 
   test("ctid-range parallel scan is disabled below PG 14") {
