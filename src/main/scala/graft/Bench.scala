@@ -18,53 +18,16 @@ object ResidentCaches {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // Shuffle-partition override for scale runs: the pair-of-record
     // protocol pins partitions = cores (sf0.1), but on 10-30x replicas
     // the per-reducer pair workload grows past executor memory and the
     // right cluster response is more reducers, not bigger ones. The
     // sf3+ rows in BENCH_NOTES document which setting they used.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // size the whole-stage-codegen cache to the workload: the static
-      // default (100 entries) thrashes under a 264-query battery —
-      // every entry's codegen units evict earlier ones, so the steady
-      // state recompiles (Janino) what it compiled minutes ago and
-      // leaks one classloader per recompile into the metaspace/GC
-      // budget. A long-running multi-query session at ANY scale wants
-      // the cache sized to its plan population; 4096 comfortably holds
-      // the battery's units (env-overridable for A/B comparability)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // accept subset-of-join-keys co-partitioning: a user repartition
-      // on l_orderkey alone then serves BOTH the (orderkey, linenumber)
-      // self-join and the downstream orders join — without this the
-      // planner re-exchanges the full joined fact (q80/c69's 120M-row
-      // shuffle at sf10). Spark's default=true guards against subset
-      // skew; our subset keys are the high-cardinality halves.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // codegen.cache.maxEntries is a STATIC conf: it only takes effect if
-    // this builder created the first session in the JVM. Read back the
-    // effective value so a silently-ignored setting (numbers regressing
-    // to cache=100 thrash) is visible in the run log, not invisible.
-    val requestedCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val effectiveCache =
-      try spark.conf.get("spark.sql.codegen.cache.maxEntries") catch { case _: Throwable => "unset" }
-    if (effectiveCache != requestedCache)
-      System.err.println(s"BENCH WARN static codegen cache conf ignored: " +
-        s"requested=$requestedCache effective=$effectiveCache " +
-        "(another SparkSession existed first in this JVM)")
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     // clean-decimal corpus (oracle-imposed) → fast-double-sum contract holds
     graft.plans.FastDoubleDecimalSumRule.install(spark)
     // optional comma-separated subset for local iteration
@@ -98,33 +61,21 @@ object Bench {
     // GC lets the ContextCleaner reap them, so in a 244-entry battery
     // later entries inherit earlier entries' storage and heap pressure
     // — the measured in-battery-vs-isolated inflation (p08 2.9x in
-    // battery, 1.27x isolated same day). A GC between entries moves
-    // that reclamation off the next entry's clock, measuring each
-    // entry closer to its isolated truth. The DuckDB twin frees its
-    // memory deterministically between queries, so this keeps the
-    // comparison symmetric rather than gaming it.
-    val gcBetween = sys.env.get("SPARK_GRAFT_GC_BETWEEN").exists(_.toBoolean)
-    // The measured rejection of gcBetween (BENCH_NOTES r9) left the
-    // mechanism question open: localCheckpoint blocks ARE persistent
-    // RDDs, so release them DIRECTLY (no forced full GC, whose heap
-    // compaction measured strictly worse). Back-to-back A/B at the
-    // 250-entry head: 166.8 s with vs 179.0 s without — freed STORAGE
-    // memory lowers unified-memory pressure on the next entry, the
-    // effect GC never delivered. Default ON; it runs strictly between
-    // entries, and the DuckDB twin frees its memory between queries
-    // the same way. One class of block IS reused across invocations by
+    // battery, 1.27x isolated same day). localCheckpoint blocks ARE
+    // persistent RDDs, so release them directly; a forced full GC
+    // between entries measured strictly worse (BENCH_NOTES r9), while
+    // releasing them measured 166.8 s vs 179.0 s at the 250-entry head
+    // (freed STORAGE memory lowers unified-memory pressure on the next
+    // entry). The DuckDB twin frees its memory between queries the
+    // same way. One class of block IS reused across invocations by
     // design: explicitly-resident caches (st06's reference signature
     // index, whose semantics are steady-state incremental dedup) —
     // those register in ResidentCaches and hygiene skips them, so the
     // entry keeps measuring what it claims to measure.
-    val unpersistBetween = sys.env.get("SPARK_GRAFT_UNPERSIST_BETWEEN").forall(_.toBoolean)
-    def hygiene(): Unit = {
-      if (unpersistBetween)
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!ResidentCaches.contains(id)) rdd.unpersist(blocking = false)
-        }
-      if (gcBetween) { System.gc(); Thread.sleep(30) }
-    }
+    def hygiene(): Unit =
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!ResidentCaches.contains(id)) rdd.unpersist(blocking = false)
+      }
     if (doWarmup) queries.foreach { case (_, fn) =>
       try force(fn) catch { case _: Throwable => }
       hygiene()
@@ -170,13 +121,12 @@ object Bench {
          |  "unit": "sec",
          |  "sf": "$sfDir",
          |  "config": {"master": "local[$cpus]", "shuffle_partitions": $shufflePartitions,
-         |             "aqe": "${sys.env.getOrElse("SPARK_GRAFT_AQE", "true")}",
+         |             "aqe": "true",
          |             "forcing": "toRdd.foreach",
          |             "protocol": "${
              (if (doWarmup) "warm" else "cold") +
                (if (passes > 1) s"+min-of-$passes" else "+single-pass") +
-               (if (gcBetween) "+gc-between" else "") +
-               (if (unpersistBetween) "+unpersist-between" else "")}"},
+               "+unpersist-between"}"},
          |  "queries": {
          |$perQuery
          |  }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+
+import graft.functions.GraftFunctions
 
 /** `SparkSessionExtensions` installer for the library's Catalyst
   * surface — the deployment path for a cluster where every session
@@ -15,82 +15,19 @@ import org.apache.spark.sql.types.IntegerType
   * }}}
   *
   * (or `SparkSession.builder.withExtensions(new GraftExtensions)`).
-  * The per-object `register(spark)` helpers remain for ad-hoc
-  * sessions; both paths bind the same expression builders, so plans
-  * are identical either way. Injected functions resolve in SQL text
-  * too (`SELECT minhash_sig(tok) FROM docs`), which the extensions
-  * spec asserts.
+  * It injects the whole [[graft.functions.GraftFunctions]] table; the
+  * per-object `register(spark)` helpers install the same table into
+  * ad-hoc sessions, so plans are identical either way. Injected
+  * functions resolve in SQL text too (`SELECT minhash_sig(tok) FROM
+  * docs`), which the extensions spec asserts.
   */
 final class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-
     // Conf-gated (spark.graft.fastDoubleDecimalSum, default false):
     // no-op unless the session opts into the clean-decimal contract.
     ext.injectOptimizerRule(_ => graft.plans.FastDoubleDecimalSumRule)
-
-    inject("vec_dot", "_FUNC_(a, b) - sequential-fold dot product") { a =>
-      graft.functions.VecDot(a(0), a(1))
-    }
-    inject("vec_dist_sq", "_FUNC_(a, b) - sequential-fold squared L2 distance") { a =>
-      graft.functions.VecDistSq(a(0), a(1))
-    }
-    inject("minhash_sig", "_FUNC_(tokens) - K-row minhash signature") { a =>
-      graft.functions.MinhashSig(a(0), graft.functions.MinhashFunctions.DefaultK)
-    }
-    inject("lsh_buckets", "_FUNC_(vec, planes) - per-table LSH bucket codes") { a =>
-      graft.functions.LshBuckets(a(0), a(1))
-    }
-    inject("sorted_intersect_size",
-      "_FUNC_(a, b) - intersection size of two sorted arrays") { a =>
-      graft.functions.SortedIntersectSize(a(0), a(1))
-    }
-    inject("topk_by", "_FUNC_(score, id, k) - bounded-heap top-k aggregate") {
-      case Seq(s, i, Literal(k: Int, IntegerType)) => graft.functions.TopKBy(s, i, k)
-      case _ => throw new IllegalArgumentException(
-        "topk_by(score double, id bigint, k int-literal)")
-    }
-    inject("vec_decimal_sum",
-      "_FUNC_(array<decimal(38,9)>) - exact element-wise vector sum aggregate") { a =>
-      graft.functions.DecimalVecSum(a(0))
-    }
-    inject("kmv_minima",
-      "_FUNC_(h, k) - k smallest distinct hashes (KMV sketch aggregate)") {
-      graft.functions.KmvFunctions.kmvBuilder
-    }
-    inject("shingle_kmv",
-      "_FUNC_(tokens, n, k) - per-document KMV sketch of n-token shingles") {
-      graft.functions.KmvFunctions.shingleBuilder
-    }
-    inject("shingle_hashes",
-      "_FUNC_(tokens, w) - every w-token window fingerprint, in order") {
-      graft.functions.SubstringDedupFunctions.hashesBuilder
-    }
-    inject("remove_spans",
-      "_FUNC_(tokens, starts, w) - drop tokens covered by removed windows") {
-      graft.functions.SubstringDedupFunctions.removeBuilder
-    }
-    inject("email_extract_all",
-      "_FUNC_(text) - default-pattern email matches (scanner, not regex)") { a =>
-      graft.functions.EmailExtractAll(a.head)
-    }
-    inject("email_extract_all_g",
-      "_FUNC_(text) - production-pattern email matches (scanner, not regex)") { a =>
-      graft.functions.EmailExtractAll(a.head, general = true)
-    }
-    inject("pg_ctid_pack", "_FUNC_(page, row) - pack a ctid into bigint") { a =>
-      graft.functions.PgCtidPack(a(0), a(1))
-    }
-    inject("pg_ctid_unpack", "_FUNC_(packed) - unpack bigint to (page, row)") { a =>
-      graft.functions.PgCtidUnpack(a.head)
-    }
-    inject("pg_ctid_text", "_FUNC_(packed) - ctid as '(page,row)' text") { a =>
-      graft.functions.PgCtidText(a.head)
+    GraftFunctions.all.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds the 10× scale-checkpoint dataset BENCH_NOTES.md cites
@@ -44,13 +44,7 @@ object Sf1Build {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     dims.foreach { t =>
       spark.read.parquet(s"$src/$t.parquet")
         .coalesce(1).write.mode("overwrite").parquet(s"$dst/$t.parquet")

@@ -120,15 +120,7 @@ case class PgCtidText(child: Expression)
 object CtidFunctions {
   import org.apache.spark.sql.functions.call_function
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pg_ctid_pack",
-      (args: Seq[Expression]) => PgCtidPack(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("pg_ctid_unpack",
-      (args: Seq[Expression]) => PgCtidUnpack(args.head), "built-in")
-    reg.createOrReplaceTempFunction("pg_ctid_text",
-      (args: Seq[Expression]) => PgCtidText(args.head), "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def pg_ctid_pack(page: Column, row: Column): Column =
     call_function("pg_ctid_pack", page, row)

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, Cast, CheckOverflow, EvalMode, Expression, ExpressionInfo, GreaterThan, If, IntegralDivide, IsNotNull, IsNull, LessThan, Literal, MakeDecimal, Multiply, Or, Remainder, UnaryExpression, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, Cast, CheckOverflow, EvalMode, Expression, GreaterThan, If, IntegralDivide, IsNotNull, IsNull, LessThan, Literal, MakeDecimal, Multiply, Or, Remainder, UnaryExpression, UnscaledValue}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions.{call_function, floor, lit, sum}
 import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, IntegerType, LongType}
@@ -190,44 +189,7 @@ object DecimalFastFunctions {
       "make_decimal(unscaled bigint, precision int literal, scale int literal)")
   }
 
-  /** The overflow contract, carried on the registered functions
-    * themselves (`DESCRIBE FUNCTION`) — a general SQL caller cannot be
-    * assumed to have read this file's scaladoc. */
-  private val contractNote =
-    "OVERFLOW CONTRACT: sum(unscaled_value(x)) accumulates a raw long " +
-      "and WRAPS SILENTLY past 2^63 where sum(x) would null/error; the " +
-      "caller must bound each group's sum of |unscaled(x)| below 2^63 " +
-      "(safe for per-key money sums, NOT for global sums over unbounded " +
-      "data). unscaled_value rejects DECIMAL(p>18) inputs at analysis time."
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[CompactUnscaledValue].getName, null, name,
-      s"$usage $contractNote", "")
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("unscaled_value"),
-      info("unscaled_value",
-        "unscaled_value(d) - the unscaled long of a compact decimal " +
-          "(precision <= 18), for primitive-long aggregation."),
-      unscaledBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sum_unscaled_safe"),
-      info("sum_unscaled_safe",
-        "sum_unscaled_safe(l, p, s) - exact DECIMAL(p, s) sum of unscaled " +
-          "bigints over an all-primitive (cnt*2^60 + acc) accumulator; no " +
-          "per-group bound needed (unlike a raw sum(unscaled_value(x))), " +
-          "nulls past DECIMAL(p) capacity. Inputs must be unscaled values " +
-          "of compact decimals (|l| <= 2^60)."),
-      safeSumBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("make_decimal"),
-      info("make_decimal",
-        "make_decimal(l, p, s) - rebuild DECIMAL(p, s) from an unscaled " +
-          "long (the inverse of unscaled_value, applied per group after " +
-          "the sum)."),
-      makeDecimalBuilder)
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.install(spark)
 
   def unscaled_value(c: Column): Column = call_function("unscaled_value", c)
 

@@ -174,9 +174,7 @@ object ExactPercentilesFunctions {
       "exact_pcts(v double, p1 double-literal, p2 double-literal, ...)")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "exact_pcts", builder, "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def exact_pcts(v: Column, ps: Double*): Column =
     call_function("exact_pcts", v +: ps.map(p => lit(p)): _*)

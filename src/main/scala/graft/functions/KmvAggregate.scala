@@ -159,12 +159,7 @@ object KmvFunctions {
       "shingle_kmv(tokens array<string>, n int-literal, k int-literal)")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_minima", kmvBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_kmv", shingleBuilder, "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def kmv_minima(h: Column, k: Int): Column = {
     import org.apache.spark.sql.functions.lit

@@ -116,10 +116,7 @@ case class LshBuckets(vec: Expression, planesExpr: Expression) extends BinaryExp
 object LshFunctions {
   import org.apache.spark.sql.functions.call_function
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_buckets", (args: Seq[Expression]) => LshBuckets(args(0), args(1)),
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def lsh_buckets(vec: Column, planes: Column): Column =
     call_function("lsh_buckets", vec, planes)

@@ -111,10 +111,7 @@ object MinhashFunctions {
 
   val DefaultK = 16
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", (args: Seq[Expression]) => MinhashSig(args(0), DefaultK),
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def minhash_sig(arr: Column): Column = call_function("minhash_sig", arr)
 }

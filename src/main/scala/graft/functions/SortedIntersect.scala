@@ -69,11 +69,7 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 object SortedIntersectFunctions {
   import org.apache.spark.sql.functions.call_function
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      (args: Seq[Expression]) => SortedIntersectSize(args(0), args(1)),
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def sorted_intersect_size(a: Column, b: Column): Column =
     call_function("sorted_intersect_size", a, b)

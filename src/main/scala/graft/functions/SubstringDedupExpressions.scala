@@ -210,12 +210,7 @@ object SubstringDedupFunctions {
       "remove_spans(tokens array<string>, starts array<bigint>, w int-literal)")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", hashesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "remove_spans", removeBuilder, "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def shingle_hashes(tok: Column, w: Int): Column = {
     import org.apache.spark.sql.functions.lit

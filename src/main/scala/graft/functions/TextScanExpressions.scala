@@ -201,12 +201,7 @@ object TextScanFunctions {
     case _ => throw new IllegalArgumentException("email_extract_all_g(text string)")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "email_extract_all", emailBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "email_extract_all_g", emailGeneralBuilder, "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def email_extract_all(text: Column): Column =
     org.apache.spark.sql.functions.call_function("email_extract_all", text)

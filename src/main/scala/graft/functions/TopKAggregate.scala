@@ -169,17 +169,8 @@ case class TopKBy(
 
 object TopKFunctions {
   import org.apache.spark.sql.functions.call_function
-  import org.apache.spark.sql.catalyst.expressions.Literal
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by",
-      (args: Seq[Expression]) => args match {
-        case Seq(s, i, Literal(k: Int, IntegerType)) => TopKBy(s, i, k)
-        case _ => throw new IllegalArgumentException(
-          "topk_by(score double, id bigint, k int-literal)")
-      },
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def topk_by(score: Column, id: Column, k: Int): Column = {
     import org.apache.spark.sql.functions.lit

@@ -151,15 +151,7 @@ case class DecimalVecSum(
 object VecSumFunctions {
   import org.apache.spark.sql.functions.call_function
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_decimal_sum",
-      (args: Seq[Expression]) => args match {
-        case Seq(v) => DecimalVecSum(v)
-        case _ => throw new IllegalArgumentException(
-          "vec_decimal_sum(array<decimal(38,9)>)")
-      },
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def vec_decimal_sum(v: Column): Column = call_function("vec_decimal_sum", v)
 }

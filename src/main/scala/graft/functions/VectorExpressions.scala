@@ -190,12 +190,7 @@ case class VecDistSq(left: Expression, right: Expression) extends BinaryExpressi
 object VectorFunctions {
   import org.apache.spark.sql.functions.{call_function, sqrt}
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", (args: Seq[Expression]) => VecDot(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dist_sq", (args: Seq[Expression]) => VecDistSq(args(0), args(1)), "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = GraftFunctions.install(spark)
 
   def vec_dist_sq(a: Column, b: Column): Column = call_function("vec_dist_sq", a, b)
 

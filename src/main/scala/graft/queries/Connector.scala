@@ -237,10 +237,6 @@ object ConnectorOps {
     if (s.conf.getOption(s"spark.sql.catalog.$name").isEmpty) {
       s.conf.set(s"spark.sql.catalog.$name", "graft.catalog.PostgresCatalog")
       s.conf.set(s"spark.sql.catalog.$name.dsn", dsn(dir))
-      // bench A/B knob: SPARK_GRAFT_VEC=false forces the row-decode
-      // path on catalog scans (same lever as the vectorizedRead option)
-      sys.env.get("SPARK_GRAFT_VEC").foreach(v =>
-        s.conf.set(s"spark.sql.catalog.$name.vectorizedRead", v))
     }
     name
   }

@@ -605,7 +605,11 @@ object PushedAggregation {
   }
 
   /** sum with a remote cast to the type Spark's merge expects
-    * (Spark: sum(int)→long, sum(float)→double, sum(dec(p,s))→dec(p+10,s)) */
+    * (Spark: sum(int)→long, sum(float)→double). Decimal sums are not
+    * pushed: Spark re-aggregates a pushed partial as
+    * `sum(cast(agg_func_0 as decimal(p,s)))`, a cast back to the
+    * column's own type, so any partial sum wider than the column
+    * overflows (NUMERIC_VALUE_OUT_OF_RANGE, or NULL without ANSI). */
   private def sumItem(n: String, pt: PgType): Option[Item] = {
     val q = PgSqlGen.quoteIdent(n)
     pt match {
@@ -613,10 +617,6 @@ object PushedAggregation {
         Some(Item(s"sum($q)::BIGINT", s"sum($n)", PgInt8, LongType))
       case PgFloat4 | PgFloat8 =>
         Some(Item(s"sum($q)::DOUBLE PRECISION", s"sum($n)", PgFloat8, DoubleType))
-      case num: PgNumeric if !num.isUnconstrained =>
-        val p2 = math.min(38, num.precision + 10)
-        Some(Item(s"sum($q)::NUMERIC($p2,${num.scale})", s"sum($n)",
-          PgNumeric(p2, num.scale), DecimalType(p2, num.scale)))
       case _ => None
     }
   }
@@ -1111,6 +1111,9 @@ final class PostgresBatchWrite(
     s"${PgSqlGen.quoteIdent(opts.schema)}.${PgSqlGen.quoteIdent(tbl)}"
   private val jobId =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+  /** every task of this job stages into `<stagingPrefix>_<part>_<task>` */
+  private val stagingPrefix =
+    s"${tbl.take(24)}_${PgSqlGen.sinkTag(opts.schema, tbl)}_stg_$jobId"
 
   private def resolveColumns: (Seq[String], Seq[PgType]) = {
     // by-name when the incoming schema matches table columns;
@@ -1138,9 +1141,7 @@ final class PostgresBatchWrite(
     }
     new PostgresWriterFactory(opts.dsn, opts.schema, tbl,
       writeSchema, colNames, pgTypes, opts.nullByteReplacement, opts.useBinaryCopy,
-      stagingPrefix = if (opts.stagedWrites)
-        Some(s"${tbl.take(24)}_${PgSqlGen.sinkTag(opts.schema, tbl)}_stg_$jobId")
-      else None)
+      stagingPrefix = if (opts.stagedWrites) Some(stagingPrefix) else None)
   }
 
   /** The reference's insert runs in ONE catalog transaction
@@ -1169,16 +1170,23 @@ final class PostgresBatchWrite(
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val stagings = messages.toSeq.collect { case m: PgStagedCommit => m.stagingTable }
-    if (stagings.nonEmpty) {
+  /** Drops every staging table of this job, not only the ones named in
+    * `messages`: Spark hands abort only the commit messages that reached
+    * the driver before the job failed, so a task that committed its
+    * staging table after that point would otherwise leave it behind. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    if (opts.stagedWrites) {
       val t = PgTransportFactory.open(opts.dsn)
-      try stagings.foreach { st =>
-        val q = s"${PgSqlGen.quoteIdent(opts.schema)}.${PgSqlGen.quoteIdent(st)}"
-        try t.execute(s"DROP TABLE IF EXISTS $q") catch { case _: Exception => () }
+      try {
+        val listed = t.query(PgCatalogQueries.listTables(opts.schema)).map(_.head)
+          .filter(_.startsWith(s"${stagingPrefix}_"))
+        val named = messages.toSeq.collect { case m: PgStagedCommit => m.stagingTable }
+        (listed ++ named).distinct.foreach { st =>
+          val q = s"${PgSqlGen.quoteIdent(opts.schema)}.${PgSqlGen.quoteIdent(st)}"
+          try t.execute(s"DROP TABLE IF EXISTS $q") catch { case _: Exception => () }
+        }
       } finally t.close()
     }
-  }
 }
 
 final class PostgresWriterFactory(

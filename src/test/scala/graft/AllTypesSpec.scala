@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
@@ -15,22 +14,14 @@ import graft.types.PgType._
   * and test/all_pg_types.sql): every type family goes server → wire →
   * Spark and, where Spark can express the type, back.
   */
-class AllTypesSpec extends AnyFunSuite {
+class AllTypesSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dsn = "mem:types"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.pgt", "graft.catalog.PostgresCatalog")
-      .config("spark.sql.catalog.pgt.dsn", dsn)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  override protected def sparkConfs: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.catalog.pgt" -> "graft.catalog.PostgresCatalog",
+    "spark.sql.catalog.pgt.dsn" -> dsn)
 
   test("every readable type family arrives with the documented Spark type") {
     val pg = InMemoryPg.forName("types")

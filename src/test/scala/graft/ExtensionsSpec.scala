@@ -1,26 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.{CtidFunctions, DecimalFastFunctions, ExactPercentilesFunctions,
+  GraftFunctions, KmvFunctions, LshFunctions, MinhashFunctions, SortedIntersectFunctions,
+  SubstringDedupFunctions, TextScanFunctions, TopKFunctions, VecSumFunctions, VectorFunctions}
 
 /** The cluster-deployment path: `spark.sql.extensions =
   * graft.GraftExtensions` must make every custom expression and
   * aggregate resolvable from SQL text with no per-call registration. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val base = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ExtensionsSpec extends AnyFunSuite with SharedSparkSession {
 
   test("GraftExtensions injects the whole function suite into a new session") {
-    base // ensure the shared context exists
+    spark // ensure the shared context exists
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -74,9 +69,42 @@ class ExtensionsSpec extends AnyFunSuite {
           "email_extract_all_g('hit a@b.com hit j.d+t@sub-1.host.io') AS g").head
       assert(em.getSeq[String](0) == Seq("a@b.com"))
       assert(em.getSeq[String](1) == Seq("a@b.com", "j.d+t@sub-1.host.io"))
+      // the percentile and unscaled-decimal functions resolve from SQL too
+      val dec = s2.sql(
+        "SELECT exact_pcts(v, 0.5d) AS p, " +
+          "sum_unscaled_safe(unscaled_value(d), 10, 2) AS s, " +
+          "make_decimal(sum(unscaled_value(d)), 10, 2) AS m " +
+          "FROM VALUES (1.0d, CAST(1.25 AS DECIMAL(5,2))), " +
+          "(3.0d, CAST(2.50 AS DECIMAL(5,2))) AS t(v, d)").head
+      assert(dec.getSeq[Double](0) == Seq(2.0))
+      assert(dec.getDecimal(1) == new java.math.BigDecimal("3.75"))
+      assert(dec.getDecimal(2) == new java.math.BigDecimal("3.75"))
+      // and every name of the table is bound, with no register call
+      val reg = s2.sessionState.functionRegistry
+      assert(GraftFunctions.all.map(_.name).distinct.size == 20)
+      GraftFunctions.all.foreach { f =>
+        assert(reg.functionExists(FunctionIdentifier(f.name)), s"${f.name} not injected")
+      }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("register helpers install the function table once and never replace a binding") {
+    val helpers: Seq[SparkSession => Unit] = Seq(
+      VectorFunctions.register, MinhashFunctions.register, LshFunctions.register,
+      SortedIntersectFunctions.register, TopKFunctions.register, VecSumFunctions.register,
+      KmvFunctions.register, SubstringDedupFunctions.register, TextScanFunctions.register,
+      CtidFunctions.register, ExactPercentilesFunctions.register, DecimalFastFunctions.register)
+    helpers.foreach(_(spark))
+    val reg = spark.sessionState.functionRegistry
+    def bound = GraftFunctions.all.map(f => f.name -> reg.lookupFunction(FunctionIdentifier(f.name)))
+    val before = bound
+    assert(before.forall(_._2.isDefined), s"unbound: ${before.filter(_._2.isEmpty).map(_._1)}")
+    helpers.foreach(_(spark))
+    bound.zip(before).foreach { case ((name, after), (_, was)) =>
+      assert(after.get eq was.get, s"$name was re-registered")
     }
   }
 }

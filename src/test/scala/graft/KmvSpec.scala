@@ -6,19 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{KmvBuffer, KmvFunctions}
 
-class KmvSpec extends AnyFunSuite {
+class KmvSpec extends AnyFunSuite with SharedSparkSession {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    KmvFunctions.register(s)
-    s
-  }
+  override protected def setUpSession(s: SparkSession): Unit = KmvFunctions.register(s)
 
   test("kmv_minima equals distinct-sort-limit-k under heavy duplication") {
     import spark.implicits._

@@ -8,19 +8,9 @@ import org.scalacheck.rng.Seed
 
 import graft.functions.{MinhashFamily, MinhashFunctions}
 
-class MinhashSpec extends AnyFunSuite {
+class MinhashSpec extends AnyFunSuite with SharedSparkSession {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    MinhashFunctions.register(s)
-    s
-  }
+  override protected def setUpSession(s: SparkSession): Unit = MinhashFunctions.register(s)
 
   private val K = MinhashFunctions.DefaultK
   private val P = MinhashFamily.P

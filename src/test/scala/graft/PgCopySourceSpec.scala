@@ -2,19 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end DSv2 test: DataFrame → pgcopy binary files → DataFrame. */
-class PgCopySourceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PgCopySourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("round-trip lineitem sample through pgcopy files") {
     val dir = Files.createTempDirectory("pgcopy").toString + "/li"

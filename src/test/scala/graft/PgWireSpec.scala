@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,18 +11,7 @@ import graft.meta.{InMemoryPg, PgTransportFactory, PgWireServer}
   * travels in-process (discovery SQL, snapshot export, parallel COPY
   * OUT, COPY IN, Parse/Describe binding) crosses actual protocol
   * bytes here. */
-class PgWireSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PgWireSpec extends AnyFunSuite with SharedSparkSession {
 
   private val memName = "wire_backing"
   private lazy val server = new PgWireServer(InMemoryPg.forName(memName))

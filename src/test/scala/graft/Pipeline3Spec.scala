@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Ann, Kmeans}
 
-class Pipeline3Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Pipeline3Spec extends AnyFunSuite with SharedSparkSession {
 
   private def emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
   private val sfDir = "/root/testdata/sf0.001"

@@ -1,23 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** p29 semantic dedup + p30 unigram-LM scoring — invariants and plan
   * shape (the oracle gate checks exact values; these pin structure). */
-class Pipeline4Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Pipeline4Spec extends AnyFunSuite with SharedSparkSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,24 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-5 entries — independent brute-force recomputes and plan shape
   * (the oracle gate checks exact values; these pin structure and the
   * algorithmic intent against a from-scratch Scala reference). */
-class Pipeline5Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Pipeline5Spec extends AnyFunSuite with SharedSparkSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 

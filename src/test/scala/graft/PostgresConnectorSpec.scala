@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,22 +10,13 @@ import graft.types.PgType._
 /** End-to-end connector tests against the offline InMemoryPg endpoint:
   * catalog SQL, parallel ctid-range scans, pushdown, count(*) pruning,
   * writes, DDL, ctid metadata column and batched DELETE. */
-class PostgresConnectorSpec extends AnyFunSuite {
+class PostgresConnectorSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dsn = "mem:spec"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.pg", "graft.catalog.PostgresCatalog")
-      .config("spark.sql.catalog.pg.dsn", dsn)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  override protected def sparkConfs: Map[String, String] = Map(
+    "spark.sql.catalog.pg" -> "graft.catalog.PostgresCatalog",
+    "spark.sql.catalog.pg.dsn" -> dsn)
 
   private lazy val pg: InMemoryPg = {
     val p = InMemoryPg.forName("spec")
@@ -756,7 +746,7 @@ class PostgresConnectorSpec extends AnyFunSuite {
     pg.clearCopyOutLog()
     val got = spark.sql(
       """SELECT grp, count(*) AS n, min(x) AS mn, max(x) AS mx,
-        |  sum(x) AS sx, sum(d) AS sd, sum(de) AS sde
+        |  sum(x) AS sx, sum(d) AS sd
         |FROM pg.public.gagg GROUP BY grp ORDER BY grp""".stripMargin).collect()
     val pushed = pg.copyOutSnapshot.filter(_.contains("GROUP BY"))
     assert(pushed.nonEmpty, s"no pushed group-by: ${pg.copyOutSnapshot}")
@@ -769,8 +759,27 @@ class PostgresConnectorSpec extends AnyFunSuite {
     val s0 = (0 until 200 by 3).map(_.toLong).sum
     assert(byGrp("g0").getLong(4) == s0)
     assert(byGrp("g0").getDouble(5) == s0 * 0.5)
-    assert(byGrp("g0").getDecimal(6) ==
-      new java.math.BigDecimal(s0).setScale(2))
+  }
+
+  test("decimal SUM is exact when the total outgrows the column's precision") {
+    pg
+    spark.sql("DROP TABLE IF EXISTS pg.public.decsum")
+    spark.sql("CREATE TABLE pg.public.decsum (grp STRING, b DECIMAL(10,2))")
+    // b = round(i/3, 2) for i in 1..100000: the total 1666683333.33 needs
+    // 12 digits, two more than the column's decimal(10,2)
+    spark.range(1, 100001)
+      .select(concat(lit("g"), col("id") % 3).as("grp"),
+        (col("id").cast("decimal(20,0)") / 3).cast("decimal(10,2)").as("b"))
+      .writeTo("pg.public.decsum").append()
+    val total = spark.sql("SELECT sum(b) FROM pg.public.decsum").head.getDecimal(0)
+    assert(total == new java.math.BigDecimal("1666683333.33"))
+    // grouped: every group's sum matches a host-side sum of the rows
+    val expect = spark.sql("SELECT grp, b FROM pg.public.decsum").collect()
+      .groupBy(_.getString(0))
+      .map { case (g, rs) => g -> rs.map(_.getDecimal(1)).reduce(_ add _) }
+    val got = spark.sql("SELECT grp, sum(b) FROM pg.public.decsum GROUP BY grp").collect()
+      .map(r => r.getString(0) -> r.getDecimal(1)).toMap
+    assert(got == expect)
   }
 
   test("connection pool caps concurrency and reuses health-checked transports") {
@@ -1047,6 +1056,35 @@ class PostgresConnectorSpec extends AnyFunSuite {
       .abort(Array(m2))
     assert(p.getTable("public", "sink").liveRows == 2)
     assert(!p.hasTable("public", "sink_stg_j_2_3"))
+  }
+
+  test("staged job abort drops a committed task's staging table it has no message for") {
+    val p = InMemoryPg.forName("stagedabort")
+    p.createTable("public", "sink", Seq("id" -> PgInt8))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)))
+    val tbl = graft.sources.postgres.PostgresTable.discover(
+      graft.sources.postgres.PostgresOptions(Map(
+        "dsn" -> "mem:stagedabort", "table" -> "sink")))
+    val job = new graft.sources.postgres.PostgresBatchWrite(tbl, schema, doTruncate = false)
+    val w = job.createBatchWriterFactory(
+      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      }).createWriter(0, 7L)
+    w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](1L)))
+    w.commit()
+    def stagings = {
+      val t = graft.meta.PgTransportFactory.open("mem:stagedabort")
+      try t.query(graft.meta.PgCatalogQueries.listTables("public")).map(_.head)
+        .filter(_.contains("_stg_"))
+      finally t.close()
+    }
+    assert(stagings.size == 1, "the committed task must have left its staging table")
+    // the job fails before that task's commit message reaches the driver
+    job.abort(Array.empty)
+    assert(stagings.isEmpty, s"staging debris left behind: $stagings")
+    assert(p.getTable("public", "sink").liveRows == 0)
   }
 
   test("staged overwrite defers the truncate into the promote transaction") {

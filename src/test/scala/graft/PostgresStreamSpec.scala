@@ -9,20 +9,9 @@ import graft.types.PgType._
 
 /** Structured Streaming over the postgres source: key-range micro-batch
   * offsets against the offline endpoint. */
-class PostgresStreamSpec extends AnyFunSuite {
+class PostgresStreamSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dsn = "mem:streamspec"
-
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def addRows(pg: InMemoryPg, tbl: String, range: Range): Unit = {
     val t = pg.getTable("public", tbl)

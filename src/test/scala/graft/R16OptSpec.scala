@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to the form it replaced (the oracle checks against DuckDB; these
   * additionally pin equivalence against the old Spark-side forms and
   * the plan shapes the round's wins depend on). */
-class R16OptSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class R16OptSpec extends AnyFunSuite with SharedSparkSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -2,38 +2,20 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Scale
 
-class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class ScaleSpec extends AnyFunSuite with SharedSparkSession {
 
-  override def afterAll(): Unit =
-    // don't leak the disabled broadcast threshold into later suites
-    // sharing this JVM-wide session
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-  private lazy val spark = {
-    val wh = Files.createTempDirectory("graft_wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      // disable auto-broadcast: at test scale everything would
-      // broadcast, hiding the co-located SMJ path under test
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // suites share the JVM-wide session; builder configs are ignored if
-    // another suite created it first, so set the critical one at runtime
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s
-  }
+  override protected def sparkConfs: Map[String, String] = Map(
+    // static: takes effect only when this suite builds the session
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft_wh").toString,
+    // disable auto-broadcast: at test scale everything would
+    // broadcast, hiding the co-located SMJ path under test
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
 
   test("bucketed join plans with no Exchange on either side") {
     val o = Tables.load(spark, "/root/testdata/sf0.001", "orders")

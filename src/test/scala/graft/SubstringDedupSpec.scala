@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
 
-class SubstringDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SubstringDedupSpec extends AnyFunSuite with SharedSparkSession {
 
   private def run(docs: Seq[(Long, String)], w: Int): Map[Long, (Long, Long, Seq[String])] = {
     import spark.implicits._

@@ -9,19 +9,9 @@ import org.scalacheck.rng.Seed
 
 import graft.functions.TopKFunctions
 
-class TopKSpec extends AnyFunSuite {
+class TopKSpec extends AnyFunSuite with SharedSparkSession {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    TopKFunctions.register(s)
-    s
-  }
+  override protected def setUpSession(s: SparkSession): Unit = TopKFunctions.register(s)
 
   test("topk_by matches row_number window selection and order, with ties") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,21 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * no whole-relation window sorts where an aggregate join-back is the
   * point, single-pass filtered aggregation).
   */
-class TpcdsWavesSpec extends AnyFunSuite {
+class TpcdsWavesSpec extends AnyFunSuite with SharedSparkSession {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    // suites share the JVM-wide session and ScaleSpec disables
-    // broadcasting; the plan assertions here depend on the default
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    s
-  }
   private val dir = "/root/testdata/sf0.001"
 
   test("q97 argmax join-back broadcasts the per-brand max side, no Window") {

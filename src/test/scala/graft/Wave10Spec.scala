@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantic properties the oracle hash can't name directly: the scrub
   * leaves NO residual matches, the audit counts recount by brute
   * force, and pre-filtering genuinely differs from post-filtering. */
-class Wave10Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Wave10Spec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 

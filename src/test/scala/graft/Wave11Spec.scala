@@ -8,18 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scrub-rule prefix is literal under regex metacharacters, and the
   * unscaled-sum fast path refuses non-compact decimal inputs loudly
   * at analysis time instead of silently mis-typing/truncating. */
-class Wave11Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Wave11Spec extends AnyFunSuite with SharedSparkSession {
 
   test("placeholderSafeDigitRule: metacharacter prefix is taken literally") {
     // pre-fix, 'E+MAIL' made the lookbehind variable-length →

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-8 operators: PQ ANN (s07) and temperature mixture sampling
   * (p47) — semantic pins plus the plan shapes that make them
   * 100 TB-safe. */
-class Wave8Spec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class Wave8Spec extends AnyFunSuite with SharedSparkSession {
 
   test("PQ: an exact duplicate vector attains the minimal ADC distance") {
     import spark.implicits._
